@@ -35,6 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from esop_spark.operators.pipelines import delete_objects
 from esop_spark.sources import manifest_json
 
 
@@ -263,46 +264,26 @@ def global_remove_backup(
     location, select victims per node, delete victim-unique objects + victim
     manifests (+ topology files) on every node.
 
-    Object deletion is distributed (foreachPartition over the removable set,
-    the DeleteObjects-batch analog); manifest/topology removal is per-victim
-    (fleet × backups rows — driver-small, as in the reference's per-node
-    loop).
+    Object deletion is one distributed action over the removable set
+    (:func:`esop_spark.operators.pipelines.delete_objects`, the
+    DeleteObjects-batch analog, shared with the single-node removal);
+    manifest/topology removal is per-victim (fleet × backups rows —
+    driver-small, as in the reference's per-node loop).
     """
     base, cluster, _dc, _node = split_node_location(node_location)
     fleet = read_fleet_manifests(spark, base, cluster, dcs)
     victims, removable = global_removal_plan(
         fleet, backup_name, oldest, older_than_ms
     )
-    removable = removable.persist()
-    n_objects = removable.count()
     victim_rows = victims.collect()  # fleet × victim-backups: driver-small
-    batch_sizes: list = []
+    cluster_dir = os.path.abspath(os.path.join(base, cluster))
+    n_objects, batch_sizes = delete_objects(
+        removable.select(
+            F.concat_ws("/", F.lit(cluster_dir), "dc", "node", "object_key")
+        ),
+        dry_run,
+    )
     if not dry_run:
-        cluster_dir = os.path.abspath(os.path.join(base, cluster))
-
-        def delete_partition(rows):
-            # chunked like the provider API (DeleteObjects caps at 100 keys
-            # per request, BaseS3Restorer.java:251-253): one round-trip per
-            # batch against an object store, plain unlinks locally; yields
-            # the per-request batch sizes (n/100 ints — bounded collect).
-            # NOTE: the deletes themselves are idempotent (missing keys are
-            # treated as deleted), but this request LOG is best-effort
-            # under task retries/stage recompute — a retried partition
-            # re-runs its (no-op) requests and the collected sizes can
-            # include the extras, so delete_requests/max_delete_batch are
-            # observability stats, not an exactly-once request count.
-            from esop_spark.sources.cloud_profiles import delete_objects_batched
-
-            return iter(
-                delete_objects_batched(
-                    os.path.join(
-                        cluster_dir, row["dc"], row["node"], row["object_key"]
-                    )
-                    for row in rows
-                )
-            )
-
-        batch_sizes = removable.rdd.mapPartitions(delete_partition).collect()
         for r in victim_rows:
             node_dir = os.path.join(cluster_dir, r["dc"], r["node"])
             for rel in (
@@ -312,7 +293,6 @@ def global_remove_backup(
                 p = os.path.join(node_dir, rel)
                 if os.path.exists(p):
                     os.remove(p)
-    removable.unpersist()
     return {
         "backups_removed": len(victim_rows),
         "objects_removed": n_objects,

@@ -32,24 +32,53 @@ def object_reference_counts(entries: DataFrame) -> DataFrame:
     )
 
 
+def _backup_rollup(entries: DataFrame) -> DataFrame:
+    """Per-backup files / size / reclaimable plus each backup's share of the
+    distinct-object totals, in two exchanges.
+
+    The first, on ``object_key``, gathers every object's references: their
+    distinct backups are its reference count (J4), and the first reference
+    is the object's one "owner" row. The second rolls the references up per
+    backup: ``owned_files``/``owned_bytes`` summed over all backups are the
+    distinct totals (A2), so the ``list`` report needs no second pass.
+    Entries without an object key are dropped, as the refcount join drops
+    them.
+    """
+    refs = (
+        entries.filter(F.col("object_key").isNotNull())
+        .groupBy("object_key")
+        .agg(
+            F.collect_list(F.struct("backup_name", "backup_ts", "size")).alias("refs"),
+            F.max("size").alias("obj_size"),
+        )
+        .select(
+            "obj_size",
+            (F.size(F.array_distinct("refs.backup_name")) == 1).alias("single"),
+            F.posexplode("refs").alias("pos", "ref"),
+        )
+    )
+    owner = F.col("pos") == 0
+    return refs.groupBy(
+        F.col("ref.backup_name").alias("backup_name"),
+        F.col("ref.backup_ts").alias("backup_ts"),
+    ).agg(
+        F.count(F.lit(1)).alias("files"),
+        F.sum("ref.size").cast("bigint").alias("size_bytes"),
+        F.sum(F.when(F.col("single"), F.col("ref.size")).otherwise(F.lit(0)))
+        .cast("bigint")
+        .alias("reclaimable_bytes"),
+        F.sum(owner.cast("bigint")).alias("owned_files"),
+        F.sum(F.when(owner, F.col("obj_size"))).cast("bigint").alias("owned_bytes"),
+    )
+
+
 def list_backups(entries: DataFrame) -> DataFrame:
     """Q1: per-backup files / occupied / reclaimable report.
 
     Equivalent of AllManifestsReport.report (Manifest.java:676-702) minus the
     driver-side rendering (that lives in esop_spark.functions.render).
     """
-    refcounts = object_reference_counts(entries)
-    return (
-        entries.join(refcounts, "object_key")
-        .groupBy("backup_name", "backup_ts")
-        .agg(
-            F.count(F.lit(1)).alias("files"),
-            F.sum("size").cast("bigint").alias("size_bytes"),
-            F.sum(F.when(F.col("n_backups") == 1, F.col("size")).otherwise(F.lit(0)))
-            .cast("bigint")
-            .alias("reclaimable_bytes"),
-        )
-    )
+    return _backup_rollup(entries).drop("owned_files", "owned_bytes")
 
 
 def totals(entries: DataFrame) -> DataFrame:
@@ -81,13 +110,18 @@ def render_report(
 
     from esop_spark.functions.render import human_bytes, render_table, render_timestamp
 
-    report = list_backups(entries)
-    all_rows = report.orderBy(
-        F.col("backup_ts").desc(), F.col("backup_name").desc()
-    ).collect()
+    # one collect of the per-backup rows; newest first, and a backup with no
+    # timestamp sorts last, as Spark's ``desc`` puts nulls last
+    all_rows = sorted(
+        _backup_rollup(entries).collect(),
+        key=lambda r: (r["backup_ts"] is not None, r["backup_ts"] or 0, r["backup_name"]),
+        reverse=True,
+    )
     rows = all_rows
     if from_timestamp is not None:
-        rows = [r for r in rows if r["backup_ts"] <= from_timestamp]
+        rows = [
+            r for r in rows if r["backup_ts"] is not None and r["backup_ts"] <= from_timestamp
+        ]
     if last_n is not None:
         rows = rows[-last_n:]  # oldest N of the newest-first list, order kept
     # totals are DISTINCT-object totals (A2, README "Listing of backups":
@@ -96,9 +130,12 @@ def render_report(
     # the unfiltered listing (the reference builds totals at report-build
     # time, before --from-timestamp/--last-n trim the display rows), so the
     # footer stays mutually consistent on filtered listings
-    t = totals(entries).collect()[0]
-    tot_files, tot_size = t["total_files"], t["total_size"]
+    tot_files = sum(r["owned_files"] for r in all_rows)
+    tot_size = sum(r["owned_bytes"] or 0 for r in all_rows)
     tot_reclaim = sum(r["reclaimable_bytes"] for r in all_rows)
+
+    def when(ts: int | None) -> str:
+        return "" if ts is None else render_timestamp(ts)
 
     def fmt_size(n: int) -> str:
         return human_bytes(n) if human_units else str(n)
@@ -109,7 +146,7 @@ def render_report(
                 "reports": [
                     {
                         "name": r["backup_name"],
-                        "timestamp": render_timestamp(r["backup_ts"]),
+                        "timestamp": when(r["backup_ts"]),
                         "unixtimestamp": r["backup_ts"],
                         "files": r["files"],
                         "size": fmt_size(r["size_bytes"]),
@@ -128,7 +165,7 @@ def render_report(
         table.append(
             [
                 r["backup_name"],
-                render_timestamp(r["backup_ts"]),
+                when(r["backup_ts"]),
                 str(r["files"]),
                 fmt_size(r["size_bytes"]),
                 fmt_size(r["reclaimable_bytes"]),

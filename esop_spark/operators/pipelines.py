@@ -1,23 +1,29 @@
-"""End-to-end backup / restore pipelines (SURVEY.md §3.1, §3.3).
+"""End-to-end backup / restore / remove pipelines (SURVEY.md §3.1, §3.3).
 
-The reference's lifecycle re-expressed as DataFrame plans + side-effecting
-file sinks:
+The reference's lifecycle re-expressed as DataFrame plans with ONE Spark
+action per side effect; counts and results come back from that action:
 
-backup  = snapshot scan → content-addressed entries → LEFT ANTI join against
-          the remote listing (incremental "freshen" skip,
-          UploadTracker.java:106-124) → foreachPartition copy → manifest JSON
-          written LAST (BaseBackupOperationCoordinator.java:151-153).
-restore = manifest resolution (latest-wins) → two-round diff vs local files
-          (DataSynchronizator.java:41-94) → download missing / delete extras,
-          hash-verify gate BEFORE the destructive leg
+backup  = snapshot scan, broadcast-left-joined to the remote listing →
+          one ``mapPartitions(...).collect()`` whose tasks copy absent
+          objects and freshen present ones (incremental skip,
+          UploadTracker.java:106-124) and return one metadata row per file
+          → manifest JSON nested from those rows on the driver and written
+          LAST (BaseBackupOperationCoordinator.java:151-153).
+remove  = victims from the manifest file listing → one object-grain
+          aggregation flagging surviving references → one action that
+          deletes and returns its counts.
+restore = manifest resolution (latest-wins, from the listing) → two-round
+          diff vs local files (DataSynchronizator.java:41-94) → download
+          missing, then delete extras — one action each; the hash-verify
+          gate runs BEFORE the destructive leg
           (RestorationPhase.java:431-435,508-511).
 
 Exactly-once semantics come from content-addressing (object keys embed the
 content digest) — a retried copy overwrites an identical object, mirroring
-the reference's idempotent upload. Transfers run inside ``foreachPartition``
-so a 1000-executor cluster moves files in parallel; per-partition batching
-amortizes connection setup (the S3 analog of the reference's 100-key
-DeleteObjects batches, BaseS3Restorer.java:252-276).
+the reference's idempotent upload. Transfers and deletes run inside
+executor tasks so a 1000-executor cluster moves files in parallel;
+per-partition batching amortizes connection setup (the S3 analog of the
+reference's 100-key DeleteObjects batches, BaseS3Restorer.java:252-276).
 """
 
 from __future__ import annotations
@@ -31,15 +37,21 @@ from pyspark.sql import functions as F
 from esop_spark.sources import manifest_json, snapshot_scan
 
 
-def _copy_partition_factory(
-    dest_root: str,
-    key_col: str,
-    src_col: str,
+def _transfer_partition_factory(
+    bucket_dir: str,
     max_bytes_per_sec: int | None = None,
     kms_key_id: str | None = None,
+    skip_refreshing: bool = False,
     retry=None,
 ):
-    """Per-partition file copier with an optional token-bucket throttle.
+    """Per-partition transfer over scan rows flagged ``remote``: copies the
+    objects the bucket lacks, freshens the ones it has, and yields every
+    row back (metadata only, no content) for the driver-side manifest.
+
+    Freshen (LocalFileBackuper.freshenRemoteObject,
+    local/LocalFileBackuper.java:48-61): a present object's mtime is
+    touched, and it is re-uploaded if the touch fails
+    (FreshenResult.UPLOAD_REQUIRED); ``skip_refreshing`` leaves it as is.
 
     U5: the reference rate-limits uploads with a Guava RateLimiter wrapping
     the stream (UploadTracker.java:164-169, io/RateLimitedInputStream.java);
@@ -57,29 +69,38 @@ def _copy_partition_factory(
     from esop_spark.functions import crypto
     from esop_spark.functions.retry import with_retries
 
-    def copy_partition(rows):
-        window_start = time.monotonic()
+    abs_bucket = os.path.abspath(bucket_dir)
+
+    def touched(path: str, now: float) -> bool:
+        try:
+            os.utime(path, (now, now))
+            return True
+        except OSError:
+            return False
+
+    def transfer_partition(rows):
+        window_start, now = time.monotonic(), time.time()
         sent = 0
         for row in rows:
-            dst = os.path.join(dest_root, row[key_col])
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            if kms_key_id is not None:
-                with_retries(
-                    lambda: crypto.encrypt_file(row[src_col], dst, kms_key_id),
-                    retry,
-                )
-            else:
-                with_retries(
-                    lambda: shutil.copyfile(row[src_col], dst), retry
-                )
-            if max_bytes_per_sec:
-                sent += os.path.getsize(dst)
-                due = sent / max_bytes_per_sec
-                elapsed = time.monotonic() - window_start
-                if due > elapsed:
-                    time.sleep(due - elapsed)
+            dst = os.path.join(abs_bucket, row["object_key"])
+            if not row["remote"] or not (skip_refreshing or touched(dst, now)):
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                if kms_key_id is not None:
+                    with_retries(
+                        lambda: crypto.encrypt_file(row["local_path"], dst, kms_key_id),
+                        retry,
+                    )
+                else:
+                    with_retries(lambda: shutil.copyfile(row["local_path"], dst), retry)
+                if max_bytes_per_sec:
+                    sent += os.path.getsize(dst)
+                    due = sent / max_bytes_per_sec
+                    elapsed = time.monotonic() - window_start
+                    if due > elapsed:
+                        time.sleep(due - elapsed)
+            yield row
 
-    return copy_partition
+    return transfer_partition
 
 
 def with_kms_key(entries: DataFrame, kms_key_id: str | None) -> DataFrame:
@@ -111,78 +132,48 @@ def backup(
     tokens: list[str] | None = None,
     retry=None,
 ) -> DataFrame:
-    """Run a backup; returns the manifest entries that were uploaded.
+    """Run a backup; returns the manifest entries that were uploaded, as a
+    materialized (driver-local) DataFrame of (object_key, size, hash).
 
     Incremental: files whose content-addressed object key already exists in
-    the bucket are skipped (anti-join), so re-running a backup of unchanged
-    data uploads nothing. ``kms_key_id`` tags every uploaded object's
-    manifest entry with its encryption key (--kmsKeyId,
-    AbstractOperationRequest.java:57-59).
+    the bucket are not copied, so re-running a backup of unchanged data
+    uploads nothing; by default they are freshened instead (see
+    :func:`_transfer_partition_factory`; ``skip_refreshing`` is
+    --skip-refreshing, impl/backup/BaseBackupOperationRequest.java:50-54).
+    ``kms_key_id`` tags every uploaded object's manifest entry with its
+    encryption key (--kmsKeyId, AbstractOperationRequest.java:57-59).
 
-    Freshen semantics (LocalFileBackuper.freshenRemoteObject,
-    local/LocalFileBackuper.java:48-61): by default an already-present
-    remote object has its last-modified time refreshed (so mtime-based
-    retention sees it as live), re-uploading if the touch fails;
-    ``skip_refreshing`` (--skip-refreshing,
-    impl/backup/BaseBackupOperationRequest.java:50-54) makes presence alone
-    count as freshened and leaves remote mtimes untouched.
+    One Spark action: the snapshot scan, broadcast-left-joined to the
+    remote listing, runs the transfers in its tasks and returns one
+    metadata row per file. The manifest is nested from those rows on the
+    driver and written after the action returns — after every upload.
     """
     backup_name = backup_name or f"{snapshot_tag}-{schema_version}-{ts_millis}"
-    # persist the scan itself: it feeds BOTH the upload diff and the manifest
-    # writer — without this the file hashing pass runs twice
-    entries = snapshot_scan.scan_snapshot_tree(spark, data_dirs, snapshot_tag).persist()
-    data_dir = os.path.join(bucket_dir, "data")
-    if os.path.isdir(data_dir):
-        remote = snapshot_scan.list_remote_objects(spark, bucket_dir)
-        to_upload = entries.join(
-            remote.select("object_key"), "object_key", "left_anti"
-        )
-        if not skip_refreshing:
-            abs_bucket = os.path.abspath(bucket_dir)
-
-            def freshen_partition(rows):
-                import time as _time
-
-                from esop_spark.functions import crypto
-
-                now = _time.time()
-                for row in rows:
-                    p = os.path.join(abs_bucket, row["object_key"])
-                    try:
-                        os.utime(p, (now, now))
-                    except OSError:
-                        # touch failed → re-upload (FreshenResult.UPLOAD_REQUIRED)
-                        if kms_key_id is not None:
-                            crypto.encrypt_file(row["local_path"], p, kms_key_id)
-                        else:
-                            shutil.copyfile(row["local_path"], p)
-
-            entries.join(
-                remote.select("object_key"), "object_key", "left_semi"
-            ).select("object_key", "local_path").foreachPartition(freshen_partition)
-    else:
-        to_upload = entries
-    to_upload = to_upload.persist()
-    to_upload.foreachPartition(
-        _copy_partition_factory(
-            bucket_dir, "object_key", "local_path", max_bytes_per_sec,
-            kms_key_id=kms_key_id, retry=retry,
-        )
-    )
-    manifest_entries = with_kms_key(
-        entries.withColumn("backup_name", F.lit(backup_name))
+    entries = with_kms_key(
+        snapshot_scan.scan_snapshot_tree(spark, data_dirs, snapshot_tag)
+        .withColumn("backup_name", F.lit(backup_name))
         .withColumn("schema_version", F.lit(schema_version))
         .withColumn("schema_content", F.lit(None).cast("string")),
         kms_key_id,
     )
-    manifest_json.write_manifests(
-        manifest_entries, os.path.join(bucket_dir, "manifests"), tokens=tokens
+    remote = snapshot_scan.list_remote_objects(spark, bucket_dir).select(
+        "object_key", F.lit(True).alias("remote")
     )
-    uploaded = to_upload.select("object_key", "size", "hash")
-    uploaded.count()  # materialize before unpersist
-    to_upload.unpersist()
-    entries.unpersist()
-    return uploaded
+    # remote is null for the objects the bucket lacks
+    flagged = entries.join(F.broadcast(remote), "object_key", "left")
+    rows = flagged.rdd.mapPartitions(
+        _transfer_partition_factory(
+            bucket_dir, max_bytes_per_sec, kms_key_id=kms_key_id,
+            skip_refreshing=skip_refreshing, retry=retry,
+        )
+    ).collect()
+    manifest_json.write_manifests(
+        rows, os.path.join(bucket_dir, "manifests"), tokens=tokens
+    )
+    return spark.createDataFrame(
+        [(r["object_key"], r["size"], r["hash"]) for r in rows if not r["remote"]],
+        "object_key string, size long, hash string",
+    )
 
 
 def restore_commitlogs(
@@ -216,6 +207,27 @@ def restore_commitlogs(
     return n
 
 
+def delete_objects(paths: DataFrame, dry_run: bool = False) -> tuple[int, list[int]]:
+    """Delete the objects named by ``paths``' single column in one Spark
+    action; returns (objects, per-request batch sizes).
+
+    Each partition issues DeleteObjects-sized bulk requests (100
+    keys/request, BaseS3Restorer.java:252-276) and yields its key count and
+    request log (n/100 ints — bounded collect). The counts are the deleting
+    action's own task results, so they are exact under task retries.
+    ``dry_run`` counts the objects and deletes nothing.
+    """
+
+    def delete_partition(rows):
+        from esop_spark.sources.cloud_profiles import delete_objects_batched
+
+        keys = [row[0] for row in rows]
+        yield len(keys), [] if dry_run else delete_objects_batched(keys)
+
+    done = paths.rdd.mapPartitions(delete_partition).collect()
+    return sum(n for n, _ in done), [s for _, sizes in done for s in sizes]
+
+
 def remove_backup(
     spark: SparkSession,
     bucket_dir: str,
@@ -228,77 +240,77 @@ def remove_backup(
     exclusively by the victim backups, then their manifests.
 
     Victim selection mirrors RemoveBackupOperation.java:177-190: exact name
-    XOR --oldest XOR --older-than. ``dry_run`` computes the deletion set as a
-    pure query (the reference's report mode).
+    XOR --oldest XOR --older-than, decided from the manifest file listing. A
+    manifest whose name has no ``-<millis>`` tail has no timestamp: it is
+    never older than a cutoff and loses --oldest to any timestamped backup.
+    ``dry_run`` counts the deletion set and deletes nothing (the
+    reference's report mode).
     """
-    from esop_spark.sources import manifest_json
-
-    entries = manifest_json.read_manifests(spark, os.path.join(bucket_dir, "manifests"))
-    manifests = entries.select("backup_name", "backup_ts").distinct()
+    manifests_dir = os.path.join(bucket_dir, "manifests")
+    listing = manifest_json.list_manifests(manifests_dir)
     if backup_name is not None:
-        victims = manifests.filter(F.col("backup_name") == backup_name)
+        victims = [n for n, _ in listing if n == backup_name]
     elif oldest:
-        # nulls last: a manifest whose name lacks a parseable -<millis> tail
-        # must never win --oldest by default (Spark sorts NULLS FIRST asc)
-        victims = manifests.orderBy(
-            F.col("backup_ts").asc_nulls_last(), F.col("backup_name").asc()
-        ).limit(1)
+        victims = [
+            min(listing, key=lambda m: (m[1] is None, m[1] or 0, m[0]))[0]
+        ] if listing else []
     elif older_than_ms is not None:
-        victims = manifests.filter(F.col("backup_ts") < older_than_ms)
+        victims = [n for n, ts in listing if ts is not None and ts < older_than_ms]
     else:
         raise ValueError("select victims via backup_name, oldest, or older_than_ms")
 
-    victim_names = [r["backup_name"] for r in victims.collect()]
-    # removable iff NO surviving (non-victim) backup references the object —
-    # anti-join against survivor references generalizes the refcount==1 rule
-    # to multi-victim (--older-than) removals
-    removable = (
-        entries.join(victims.select("backup_name"), "backup_name", "left_semi")
-        .select("object_key")
-        .distinct()
-        .join(
-            entries.join(victims.select("backup_name"), "backup_name", "left_anti")
-            .select("object_key")
-            .distinct(),
-            "object_key",
-            "left_anti",
+    n_objects, batch_sizes = 0, []
+    if victims:
+        # removable iff every reference is a victim's: one object-grain
+        # aggregation generalizes the refcount==1 rule to multi-victim
+        # (--older-than) removals
+        entries = manifest_json.read_manifests(spark, manifests_dir)
+        removable = (
+            entries.groupBy("object_key")
+            .agg(F.bool_and(F.col("backup_name").isin(victims)).alias("victims_only"))
+            .filter("victims_only AND object_key IS NOT NULL")
         )
-    )
-    removable = removable.persist()
-    n_objects = removable.count()
-    batch_sizes: list = []
-    if not dry_run:
         abs_bucket = os.path.abspath(bucket_dir)
-
-        # distributed delete — each partition issues DeleteObjects-sized
-        # bulk requests (100 keys/request, BaseS3Restorer.java:252-276) and
-        # yields its request log (n/100 ints — bounded collect); victim
-        # manifests (one per backup, driver-small) removed last so a
-        # crashed run stays listable. Deletes are idempotent but the
-        # request log is best-effort under task retries (a recomputed
-        # partition re-logs its no-op requests), so delete_requests/
-        # max_delete_batch are observability stats, not exactly-once counts
-        def delete_partition(rows):
-            from esop_spark.sources.cloud_profiles import delete_objects_batched
-
-            return iter(
-                delete_objects_batched(
-                    os.path.join(abs_bucket, row["object_key"]) for row in rows
-                )
-            )
-
-        batch_sizes = removable.rdd.mapPartitions(delete_partition).collect()
-        for name in victim_names:
-            mp = os.path.join(bucket_dir, "manifests", f"{name}.json")
+        n_objects, batch_sizes = delete_objects(
+            removable.select(F.concat(F.lit(abs_bucket + "/"), "object_key")), dry_run
+        )
+    if not dry_run:
+        # victim manifests (one per backup, driver-small) go last, so a
+        # crashed run stays listable
+        for name in victims:
+            mp = os.path.join(manifests_dir, f"{name}.json")
             if os.path.exists(mp):
                 os.remove(mp)
-    removable.unpersist()
     return {
-        "backups_removed": len(victim_names),
+        "backups_removed": len(victims),
         "objects_removed": n_objects,
         "delete_requests": len(batch_sizes),
         "max_delete_batch": max(batch_sizes, default=0),
     }
+
+
+def latest_backup(manifests_dir: str) -> str:
+    """The newest backup by manifest name (ties → larger name; a manifest
+    with no ``-<millis>`` tail sorts after every timestamped one, as
+    Spark's ``desc`` puts nulls last)."""
+    listing = manifest_json.list_manifests(manifests_dir)
+    if not listing:
+        raise ValueError(f"no manifests in {manifests_dir}")
+    return max(listing, key=lambda m: (m[1] is not None, m[1] or 0, m[0]))[0]
+
+
+def _for_each(df: DataFrame, fn) -> int:
+    """Run ``fn`` on every row of ``df`` in its executor tasks — one Spark
+    action — and return the number of rows."""
+
+    def run(rows):
+        n = 0
+        for row in rows:
+            fn(row)
+            n += 1
+        yield n
+
+    return sum(df.rdd.mapPartitions(run).collect())
 
 
 def restore(
@@ -326,17 +338,7 @@ def restore(
     if not os.path.isdir(manifests_dir):
         raise ValueError(f"no manifests directory in {bucket_dir!r} — nothing to restore")
     manifests = manifest_json.read_manifests(spark, manifests_dir)
-    if backup_name is None:
-        latest = (
-            manifests.select("backup_name", "backup_ts")
-            .distinct()
-            .orderBy(F.col("backup_ts").desc(), F.col("backup_name").desc())
-            .limit(1)
-            .collect()
-        )
-        if not latest:
-            raise ValueError(f"no manifests in {bucket_dir}")
-        backup_name = latest[0]["backup_name"]
+    backup_name = backup_name or latest_backup(manifests_dir)
     mf = manifests.filter(F.col("backup_name") == backup_name)
 
     # local relative path: ks/table-id/[idxdir/]component (enrichment P14 —
@@ -388,7 +390,8 @@ def restore(
             "local_path",
             "local_hash",
         )
-        joined = mf_files.join(local, "rel_file", "full_outer")
+        # both legs read the join: cache it so the local files hash once
+        joined = mf_files.join(local, "rel_file", "full_outer").persist()
         to_download = joined.filter(
             F.col("local_hash").isNull()
             | (F.col("hash").isNotNull() & (F.col("hash") != F.col("local_hash")))
@@ -398,39 +401,35 @@ def restore(
         to_download = mf_files.select("rel_file", "object_key", "kms_key_id")
         to_delete = None
 
-    # src/dst are computed as columns and the copy runs in foreachPartition:
-    # nothing proportional to file count ever lands on the driver (only the
-    # two counts come back).
+    # src/dst are computed as columns and each leg is one action whose tasks
+    # do the work and return their counts: nothing proportional to file
+    # count ever lands on the driver. Extras are deleted only after every
+    # download succeeded.
     abs_bucket, abs_target = os.path.abspath(bucket_dir), os.path.abspath(target_dir)
-    dl_df = to_download.select(
-        F.concat(F.lit(abs_bucket + "/"), F.col("object_key")).alias("src"),
-        F.concat(F.lit(abs_target + "/"), F.col("rel_file")).alias("dst"),
-        "kms_key_id",
-    ).persist()
-    n_downloaded = dl_df.count()
 
-    def download_partition(rows):
+    def download(row):
         from esop_spark.functions import crypto
         from esop_spark.functions.retry import with_retries
 
-        for row in rows:
-            os.makedirs(os.path.dirname(row["dst"]), exist_ok=True)
-            # decrypt-aware copy: plaintext objects pass through untouched
-            with_retries(
-                lambda: crypto.decrypt_to(row["src"], row["dst"], row["kms_key_id"]),
-                retry,
-            )
+        os.makedirs(os.path.dirname(row["dst"]), exist_ok=True)
+        # decrypt-aware copy: plaintext objects pass through untouched
+        with_retries(
+            lambda: crypto.decrypt_to(row["src"], row["dst"], row["kms_key_id"]), retry
+        )
 
-    dl_df.foreachPartition(download_partition)
-    dl_df.unpersist()
+    n_downloaded = _for_each(
+        to_download.select(
+            F.concat(F.lit(abs_bucket + "/"), F.col("object_key")).alias("src"),
+            F.concat(F.lit(abs_target + "/"), F.col("rel_file")).alias("dst"),
+            "kms_key_id",
+        ),
+        download,
+    )
     n_deleted = 0
     if to_delete is not None and delete_extras:
-        del_df = to_delete.select("local_path").persist()
-        n_deleted = del_df.count()
-        del_df.foreachPartition(
-            lambda rows: [os.remove(row["local_path"]) for row in rows]
-        )
-        del_df.unpersist()
+        n_deleted = _for_each(to_delete, lambda row: os.remove(row["local_path"]))
+    if local is not None:
+        joined.unpersist()
     out = {"downloaded": n_downloaded, "deleted": n_deleted}
     if cassandra_config_dir is not None:
         from esop_spark.operators import cassandra_yaml

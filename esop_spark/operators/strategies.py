@@ -136,21 +136,13 @@ def restore_phased(
 
     # -- DOWNLOAD phase: into the importing source dir, never the live dirs
     download_dir = os.path.join(data_dir, ".esop-import")
+    backup_name = backup_name or pipelines.latest_backup(
+        os.path.join(bucket_dir, "manifests")
+    )
     stats = pipelines.restore(
         spark, bucket_dir, download_dir, backup_name=backup_name,
         delete_extras=False,
     )
-    if backup_name is None:
-        manifests = manifest_json.read_manifests(
-            spark, os.path.join(bucket_dir, "manifests")
-        )
-        backup_name = (
-            manifests.select("backup_name", "backup_ts")
-            .distinct()
-            .orderBy(F.col("backup_ts").desc(), F.col("backup_name").desc())
-            .limit(1)
-            .collect()[0]["backup_name"]
-        )
 
     # -- VERIFY phase (gate before touching the live dirs)
     bad = _verify_downloaded(spark, bucket_dir, download_dir, backup_name)

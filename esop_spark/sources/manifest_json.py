@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,6 +87,26 @@ MANIFEST_SCHEMA = StructType(
 )
 
 
+# a backup's timestamp is the numeric ``-<millis>`` tail of its manifest's
+# name; a name without one has a null timestamp
+BACKUP_TS_RE = r"-([0-9]+)$"
+
+
+def list_manifests(manifests_dir: str) -> list[tuple[str, int | None]]:
+    """(backup_name, backup_ts) of every manifest file in ``manifests_dir``,
+    from the directory listing alone — what ``read_manifests`` would report,
+    without a Spark job. Hidden files are skipped, as Spark's file index
+    skips them; a tail beyond bigint is null, as ``try_cast`` makes it."""
+    out = []
+    for f in sorted(os.listdir(manifests_dir)):
+        if not f.startswith((".", "_")):
+            name = re.sub(r"\.json$", "", f)
+            m = re.search(BACKUP_TS_RE, name)
+            ts = int(m.group(1)) if m else None
+            out.append((name, ts if ts is not None and ts < 1 << 63 else None))
+    return out
+
+
 def read_manifests(
     spark: SparkSession, path: str, include_path: bool = False
 ) -> DataFrame:
@@ -109,7 +130,7 @@ def read_manifests(
         )
         .withColumn(
             "backup_ts",
-            F.substring_index(F.col("backup_name"), "-", -1).cast("bigint"),
+            F.regexp_extract("backup_name", BACKUP_TS_RE, 1).try_cast("bigint"),
         )
     )
     path_cols = ["manifest_path"] if include_path else []
@@ -193,92 +214,59 @@ def read_backup_tokens(
     return list(raw[0]["tokens"])
 
 
-def manifest_json_rows(
-    entries: DataFrame, tokens: list[str] | None = None
-) -> DataFrame:
-    """S14: flat entries → one (backup_name, json) row per backup, nested in
-    the reference's manifest shape. Aggregation is distributed (three
-    map_from_entries rollups); only the final per-backup JSON string comes
-    back to the caller. ``tokens`` (the backing node's ring tokens,
-    impl/Manifest.java tokens field) are embedded verbatim in each doc —
-    they feed the in-place restore's ``initial_token`` rewrite."""
-    per_sstable = entries.groupBy(
-        "backup_name", "schema_version", "keyspace", "table_name", "table_id",
-        "schema_content", "sstable_base",
-    ).agg(
-        F.collect_list(
-            F.struct(
-                F.col("object_key").alias("objectKey"),
-                F.col("type"),
-                F.col("size"),
-                F.col("hash"),
-                (
-                    F.col("kms_key_id")
-                    if "kms_key_id" in entries.columns
-                    else F.lit(None).cast("string")
-                ).alias("kmsKeyId"),
-            )
-        ).alias("entry_list")
-    )
-    per_table = per_sstable.groupBy(
-        "backup_name", "schema_version", "keyspace", "table_name"
-    ).agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("sstable_base", "entry_list"))
-        ).alias("sstables"),
-        F.first("table_id").alias("id"),
-        F.first("schema_content").alias("schemaContent"),
-    )
-    per_ks = per_table.groupBy("backup_name", "schema_version", "keyspace").agg(
-        F.map_from_entries(
-            F.collect_list(
-                F.struct(
-                    "table_name",
-                    F.struct("sstables", "id", "schemaContent").alias("t"),
-                )
-            )
-        ).alias("tables")
-    )
-    per_backup = per_ks.groupBy("backup_name", "schema_version").agg(
-        F.map_from_entries(
-            F.collect_list(
-                F.struct("keyspace", F.struct("tables").alias("k"))
-            )
-        ).alias("keyspaces")
-    )
-    doc_fields = [
-        F.struct(
-            F.col("backup_name").alias("name"), F.col("keyspaces")
-        ).alias("snapshot"),
-        F.col("schema_version").alias("schemaVersion"),
-    ]
-    if tokens is not None:
-        doc_fields.append(
-            F.array(*[F.lit(t) for t in tokens]).alias("tokens")
-        )
-    return per_backup.select("backup_name", F.to_json(F.struct(*doc_fields)).alias("json"))
+def _without_nulls(x):
+    """Drop null fields recursively, as ``to_json`` does."""
+    if isinstance(x, dict):
+        return {k: _without_nulls(v) for k, v in x.items() if v is not None}
+    if isinstance(x, list):
+        return [_without_nulls(v) for v in x]
+    return x
 
 
-def write_manifests(
-    entries: DataFrame, out_dir: str, tokens: list[str] | None = None
-) -> list[str]:
-    """Write one ``<backup_name>.json`` per backup under ``out_dir``.
+def write_manifests(entries, out_dir: str, tokens: list[str] | None = None) -> list[str]:
+    """S14: write one ``<backup_name>.json`` per backup under ``out_dir``,
+    nested in the reference's shape (snapshot → keyspaces → tables →
+    sstables → entries).
 
-    Manifests are a per-backup singleton (small) — written driver-side after
-    the distributed nesting aggregation, mirroring the reference's
-    manifest-uploaded-last ordering (BaseBackupOperationCoordinator.java:151-153).
-    Driver memory bound: the largest single manifest document (one node's
-    sstable list — the same in-heap bound the reference's Jackson writer has,
-    impl/Manifest.java). For a node with 10^7+ sstables, switch to
-    ``manifest_json_rows(...).write.text`` partitioned by backup_name to
-    stream each document from executors instead.
+    ``entries`` is a flat entries DataFrame (collected here) or its rows
+    already on the driver — the backup pipeline passes the metadata rows its
+    transfer action returned, so writing costs no Spark job. Keyspaces,
+    tables, sstables and entries come out sorted, so the same entries always
+    give the same document; null fields are omitted, as ``to_json`` omits
+    them. ``tokens`` (the backing node's ring tokens, impl/Manifest.java
+    tokens field) are embedded verbatim in each doc — they feed the in-place
+    restore's ``initial_token`` rewrite. Written after every object is
+    uploaded, mirroring the reference's manifest-uploaded-last ordering
+    (BaseBackupOperationCoordinator.java:151-153). Driver memory bound: one
+    metadata row (no content) per file of one backup — the same in-heap
+    bound the reference's Jackson writer has for the document
+    (impl/Manifest.java).
     """
+    if isinstance(entries, DataFrame):
+        entries = entries.collect()
+    docs: dict[str, dict] = {}
+    order = ("keyspace", "table_name", "sstable_base", "object_key")
+    for r in sorted(
+        (r.asDict() for r in entries), key=lambda r: tuple(r.get(k) or "" for k in order)
+    ):
+        doc = docs.setdefault(r["backup_name"], {
+            "snapshot": {"name": r["backup_name"], "keyspaces": {}},
+            "schemaVersion": r.get("schema_version"),
+            "tokens": None if tokens is None else list(tokens),
+        })
+        tables = doc["snapshot"]["keyspaces"].setdefault(r["keyspace"], {"tables": {}})
+        table = tables["tables"].setdefault(r["table_name"], {
+            "sstables": {}, "id": r.get("table_id"), "schemaContent": r.get("schema_content"),
+        })
+        table["sstables"].setdefault(r["sstable_base"], []).append({
+            "objectKey": r["object_key"], "type": r.get("type"), "size": r.get("size"),
+            "hash": r.get("hash"), "kmsKeyId": r.get("kms_key_id"),
+        })
     os.makedirs(out_dir, exist_ok=True)
     paths = []
-    for row in manifest_json_rows(entries, tokens=tokens).collect():
-        p = os.path.join(out_dir, f"{row['backup_name']}.json")
+    for name, doc in docs.items():
+        p = os.path.join(out_dir, f"{name}.json")
         with open(p, "w") as f:
-            # round-trip through json for stable pretty formatting
-            json.dump(json.loads(row["json"]), f, indent=2)
+            json.dump(_without_nulls(doc), f, indent=2)
         paths.append(p)
     return paths

@@ -86,3 +86,41 @@ def test_schema_consensus(spark):
     t2 = spark.createDataFrame([("n1", "sv1"), ("n2", "sv2")], "h string, schema_version string")
     assert topology.schema_consensus(t1) is True
     assert topology.schema_consensus(t2) is False
+
+
+def test_untimestamped_manifest_sorts_last_and_is_never_a_victim(spark, tmp_path):
+    """A manifest whose name has no numeric ``-<millis>`` tail has a null
+    timestamp: ``list`` puts it after every timestamped backup (newest
+    first, nulls last, as Spark's ``desc``), ``remove --oldest`` and
+    ``--older-than`` never pick it, and it is never the latest backup."""
+    import shutil
+
+    from esop_spark.sources import manifest_json
+
+    data, bucket = str(tmp_path / "data"), str(tmp_path / "bucket")
+    for tag, ts in (("snap1", 1000), ("snap2", 2000)):
+        make_tree(data, tag, BASE_FILES)
+        pipelines.backup(spark, [data], tag, bucket, schema_version="sv", ts_millis=ts)
+    mdir = os.path.join(bucket, "manifests")
+    for name in ("adhoc", "snap0-sv-latest"):
+        shutil.copy(os.path.join(mdir, "snap1-sv-1000.json"), os.path.join(mdir, f"{name}.json"))
+
+    report = json.loads(
+        manifest.render_report(manifest_json.read_manifests(spark, mdir), fmt="json")
+    )
+    assert [r["name"] for r in report["reports"]] == [
+        "snap2-sv-2000", "snap1-sv-1000", "snap0-sv-latest", "adhoc",
+    ]
+    assert report["reports"][-1]["unixtimestamp"] is None
+    assert report["totalFiles"] == 4
+    table = manifest.render_report(manifest_json.read_manifests(spark, mdir))
+    assert table.splitlines()[-2].split()[0] == "adhoc"
+    assert pipelines.latest_backup(mdir) == "snap2-sv-2000"
+
+    stats = pipelines.remove_backup(spark, bucket, oldest=True)
+    assert stats["backups_removed"] == 1 and stats["objects_removed"] == 0
+    assert sorted(os.listdir(mdir)) == ["adhoc.json", "snap0-sv-latest.json", "snap2-sv-2000.json"]
+
+    stats = pipelines.remove_backup(spark, bucket, older_than_ms=10**15)
+    assert stats["backups_removed"] == 1
+    assert sorted(os.listdir(mdir)) == ["adhoc.json", "snap0-sv-latest.json"]

@@ -2,6 +2,7 @@
 (the Spark-native analog of the reference's embedded-Cassandra e2e suite,
 AbstractBackupTest.java / BaseListingRemovalTest.java)."""
 
+import json
 import os
 
 import pytest
@@ -255,3 +256,56 @@ def test_legacy_flat_entries_shim(spark, tmp_path):
     assert r["sstable_base"] == "me-1-big"
     assert r["backup_ts"] == 500
     assert r["object_key"].endswith("me-1-big-Data.db")
+
+
+def test_backup_returns_materialized_upload_set(spark, tree):
+    """The returned upload set is data, not a plan over the snapshot: it
+    still collects after the snapshot directories are gone."""
+    import shutil
+
+    data, bucket, _ = tree
+    up = pipelines.backup(spark, [data], "snap1", bucket, schema_version="sv1", ts_millis=1000)
+    shutil.rmtree(data)
+    rows = up.collect()
+    assert len(rows) == 4 and up.count() == 4
+    assert {r["size"] for r in rows} == {len(v) for v in BASE_FILES.values()}
+
+
+def test_manifest_documents_are_deterministic(spark, tmp_path):
+    """Two backups of one tree write byte-identical documents apart from
+    snapshot.name: keyspaces, tables, sstables and entries come out sorted,
+    and null kmsKeyId / schemaContent are omitted."""
+    data, bucket = str(tmp_path / "data"), str(tmp_path / "bucket")
+    files = {
+        (ks, t, f"me-{g}-big-{c}.db"): f"{ks}-{t}-{g}-{c}"
+        for ks in ("ks2", "ks1") for t in ("t3", "t1") for g in (7, 2, 11)
+        for c in ("Index", "Data")
+    }
+    texts = []
+    for tag in ("snap1", "snap2"):
+        make_tree(data, tag, files)
+        pipelines.backup(spark, [data], tag, bucket, schema_version="sv1", ts_millis=1000)
+        with open(os.path.join(bucket, "manifests", f"{tag}-sv1-1000.json")) as f:
+            texts.append(f.read())
+    assert texts[1] == texts[0].replace('"snap1-sv1-1000"', '"snap2-sv1-1000"')
+    assert "kmsKeyId" not in texts[0] and "schemaContent" not in texts[0]
+    doc = json.loads(texts[0])
+    keyspaces = doc["snapshot"]["keyspaces"]
+    assert list(keyspaces) == ["ks1", "ks2"]
+    table = keyspaces["ks1"]["tables"]["t1"]
+    assert table["id"] == TABLE_ID
+    assert list(table["sstables"]) == ["me-11-big", "me-2-big", "me-7-big"]
+    keys = [e["objectKey"] for e in table["sstables"]["me-2-big"]]
+    assert keys == sorted(keys) and len(keys) == 2
+
+
+def test_delete_objects_counts_come_from_the_deleting_action(spark, tmp_path):
+    paths = [str(tmp_path / f"obj-{i}") for i in range(230)]
+    for p in paths:
+        open(p, "w").close()
+    df = spark.createDataFrame([(p,) for p in paths], "path string").repartition(2)
+    assert pipelines.delete_objects(df, dry_run=True) == (230, [])
+    assert all(os.path.exists(p) for p in paths)
+    n, sizes = pipelines.delete_objects(df)
+    assert n == 230 and sum(sizes) == 230 and 0 < max(sizes) <= 100
+    assert not any(os.path.exists(p) for p in paths)
