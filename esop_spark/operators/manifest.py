@@ -20,18 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def object_reference_counts(entries: DataFrame) -> DataFrame:
-    """J4: object_key -> number of distinct backups referencing it.
-
-    Mirrors ManifestFilesCounter (Manifest.java:407-457): size recorded once
-    per key (entries of the same immutable object agree on size).
-    """
-    return entries.groupBy("object_key").agg(
-        F.countDistinct("backup_name").alias("n_backups"),
-        F.max("size").alias("obj_size"),
-    )
-
-
 def _backup_rollup(entries: DataFrame) -> DataFrame:
     """Per-backup files / size / reclaimable plus each backup's share of the
     distinct-object totals, in two exchanges.
@@ -41,8 +29,8 @@ def _backup_rollup(entries: DataFrame) -> DataFrame:
     is the object's one "owner" row. The second rolls the references up per
     backup: ``owned_files``/``owned_bytes`` summed over all backups are the
     distinct totals (A2), so the ``list`` report needs no second pass.
-    Entries without an object key are dropped, as the refcount join drops
-    them.
+    Entries without an object key are dropped, as the reference-count join
+    of Q1's definition drops them.
     """
     refs = (
         entries.filter(F.col("object_key").isNotNull())
@@ -85,11 +73,12 @@ def totals(entries: DataFrame) -> DataFrame:
     """A2: global distinct totals (Manifest.java:452-458).
 
     totalFiles counts distinct objects; totalSize counts each object's size
-    once regardless of how many manifests reference it.
+    once regardless of how many manifests reference it — the sums of the
+    rollup's owner columns, as the ``list`` footer sums them.
     """
-    return object_reference_counts(entries).agg(
-        F.count(F.lit(1)).cast("bigint").alias("total_files"),
-        F.sum("obj_size").cast("bigint").alias("total_size"),
+    return _backup_rollup(entries).agg(
+        F.coalesce(F.sum("owned_files"), F.lit(0)).cast("bigint").alias("total_files"),
+        F.sum("owned_bytes").cast("bigint").alias("total_size"),
     )
 
 
@@ -175,18 +164,25 @@ def render_report(
     return render_table(table)
 
 
-def removable_entries(entries: DataFrame, backup_name: str) -> DataFrame:
-    """Q2: objects safe to delete with backup `backup_name` — those referenced
-    by exactly one manifest (necessarily that backup).
+def removable_entries(entries: DataFrame, victims) -> DataFrame:
+    """Q2: (object_key, size) of the objects safe to delete with the backup
+    ``victims`` (one name or a list of names) — those every reference to
+    which is a victim's. For one victim these are the objects referenced by
+    exactly one manifest, necessarily that backup; one object-grain
+    aggregation generalizes the rule to multi-victim (--older-than)
+    removals.
 
     Mirrors RemoveBackupOperation's unique-file selection
     (/root/reference/core/src/main/java/com/instaclustr/esop/impl/remove/RemoveBackupOperation.java:100-190
     via Manifest.java:460-483).
     """
-    refcounts = object_reference_counts(entries)
     return (
-        entries.filter(F.col("backup_name") == backup_name)
+        entries.filter(F.col("object_key").isNotNull())
+        .groupBy("object_key")
+        .agg(
+            F.bool_and(F.col("backup_name").isin(victims)).alias("victims_only"),
+            F.max("size").alias("size"),
+        )
+        .filter("victims_only")
         .select("object_key", "size")
-        .distinct()
-        .join(refcounts.filter(F.col("n_backups") == 1), "object_key", "left_semi")
     )

@@ -12,11 +12,11 @@ backup  = snapshot scan, broadcast-left-joined to the remote listing →
 remove  = victims from the manifest file listing → one object-grain
           aggregation flagging surviving references → one action that
           deletes and returns its counts.
-restore = manifest resolution (latest-wins, from the listing) → two-round
-          diff vs local files (DataSynchronizator.java:41-94) → download
-          missing, then delete extras — one action each; the hash-verify
-          gate runs BEFORE the destructive leg
-          (RestorationPhase.java:431-435,508-511).
+restore = manifest resolution (latest-wins from the listing, skipping
+          manifests without entries) → two-round diff vs local files
+          (DataSynchronizator.java:41-94) → download missing, then delete
+          extras — one action each; the hash-verify gate runs BEFORE the
+          destructive leg (RestorationPhase.java:431-435,508-511).
 
 Exactly-once semantics come from content-addressing (object keys embed the
 content digest) — a retried copy overwrites an identical object, mirroring
@@ -34,6 +34,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from esop_spark.operators import manifest
 from esop_spark.sources import manifest_json, snapshot_scan
 
 
@@ -152,8 +153,7 @@ def backup(
     entries = with_kms_key(
         snapshot_scan.scan_snapshot_tree(spark, data_dirs, snapshot_tag)
         .withColumn("backup_name", F.lit(backup_name))
-        .withColumn("schema_version", F.lit(schema_version))
-        .withColumn("schema_content", F.lit(None).cast("string")),
+        .withColumn("schema_version", F.lit(schema_version)),
         kms_key_id,
     )
     remote = snapshot_scan.list_remote_objects(spark, bucket_dir).select(
@@ -261,14 +261,8 @@ def remove_backup(
 
     n_objects, batch_sizes = 0, []
     if victims:
-        # removable iff every reference is a victim's: one object-grain
-        # aggregation generalizes the refcount==1 rule to multi-victim
-        # (--older-than) removals
-        entries = manifest_json.read_manifests(spark, manifests_dir)
-        removable = (
-            entries.groupBy("object_key")
-            .agg(F.bool_and(F.col("backup_name").isin(victims)).alias("victims_only"))
-            .filter("victims_only AND object_key IS NOT NULL")
+        removable = manifest.removable_entries(
+            manifest_json.read_manifests(spark, manifests_dir), victims
         )
         abs_bucket = os.path.abspath(bucket_dir)
         n_objects, batch_sizes = delete_objects(
@@ -292,25 +286,16 @@ def remove_backup(
 def latest_backup(manifests_dir: str) -> str:
     """The newest backup by manifest name (ties → larger name; a manifest
     with no ``-<millis>`` tail sorts after every timestamped one, as
-    Spark's ``desc`` puts nulls last)."""
+    Spark's ``desc`` puts nulls last) whose manifest lists an entry: a
+    truncated or empty manifest is passed over, as reading the entries
+    would pass over it."""
     listing = manifest_json.list_manifests(manifests_dir)
-    if not listing:
-        raise ValueError(f"no manifests in {manifests_dir}")
-    return max(listing, key=lambda m: (m[1] is not None, m[1] or 0, m[0]))[0]
-
-
-def _for_each(df: DataFrame, fn) -> int:
-    """Run ``fn`` on every row of ``df`` in its executor tasks — one Spark
-    action — and return the number of rows."""
-
-    def run(rows):
-        n = 0
-        for row in rows:
-            fn(row)
-            n += 1
-        yield n
-
-    return sum(df.rdd.mapPartitions(run).collect())
+    for name, _ in sorted(
+        listing, key=lambda m: (m[1] is not None, m[1] or 0, m[0]), reverse=True
+    ):
+        if manifest_json.has_entries(os.path.join(manifests_dir, f"{name}.json")):
+            return name
+    raise ValueError(f"no manifests with entries in {manifests_dir}")
 
 
 def restore(
@@ -326,7 +311,9 @@ def restore(
 
     Files land under ``<target_dir>/<keyspace>/<table>-<id>/<component>``.
     The mismatch (corruption) leg re-downloads; extras are deleted only after
-    downloads succeed (ordering gate).
+    downloads succeed (ordering gate). A named backup whose manifest lists
+    no entry (missing, truncated or empty) raises instead of treating every
+    local file as an extra.
 
     ``cassandra_config_dir`` opts into the in-place finish: rewrite that
     directory's ``cassandra.yaml`` (``auto_bootstrap: false`` + the
@@ -337,9 +324,14 @@ def restore(
     manifests_dir = os.path.join(bucket_dir, "manifests")
     if not os.path.isdir(manifests_dir):
         raise ValueError(f"no manifests directory in {bucket_dir!r} — nothing to restore")
-    manifests = manifest_json.read_manifests(spark, manifests_dir)
-    backup_name = backup_name or latest_backup(manifests_dir)
-    mf = manifests.filter(F.col("backup_name") == backup_name)
+    if backup_name is None:
+        backup_name = latest_backup(manifests_dir)
+    elif not manifest_json.has_entries(os.path.join(manifests_dir, f"{backup_name}.json")):
+        # an empty file set would make every local file an extra
+        raise ValueError(f"backup {backup_name!r} has no manifest entries — nothing to restore")
+    mf = manifest_json.read_manifests(
+        spark, os.path.join(manifests_dir, f"{backup_name}.json")
+    )
 
     # local relative path: ks/table-id/[idxdir/]component (enrichment P14 —
     # object keys drop the <generation>-<digest> path component)
@@ -407,27 +399,32 @@ def restore(
     # download succeeded.
     abs_bucket, abs_target = os.path.abspath(bucket_dir), os.path.abspath(target_dir)
 
-    def download(row):
+    def download_partition(rows):
         from esop_spark.functions import crypto
         from esop_spark.functions.retry import with_retries
 
-        os.makedirs(os.path.dirname(row["dst"]), exist_ok=True)
-        # decrypt-aware copy: plaintext objects pass through untouched
-        with_retries(
-            lambda: crypto.decrypt_to(row["src"], row["dst"], row["kms_key_id"]), retry
-        )
+        n = 0
+        for row in rows:
+            os.makedirs(os.path.dirname(row["dst"]), exist_ok=True)
+            # decrypt-aware copy: plaintext objects pass through untouched
+            with_retries(
+                lambda: crypto.decrypt_to(row["src"], row["dst"], row["kms_key_id"]), retry
+            )
+            n += 1
+        yield n
 
-    n_downloaded = _for_each(
+    n_downloaded = sum(
         to_download.select(
             F.concat(F.lit(abs_bucket + "/"), F.col("object_key")).alias("src"),
             F.concat(F.lit(abs_target + "/"), F.col("rel_file")).alias("dst"),
             "kms_key_id",
-        ),
-        download,
+        )
+        .rdd.mapPartitions(download_partition)
+        .collect()
     )
     n_deleted = 0
     if to_delete is not None and delete_extras:
-        n_deleted = _for_each(to_delete, lambda row: os.remove(row["local_path"]))
+        n_deleted, _ = delete_objects(to_delete)
     if local is not None:
         joined.unpersist()
     out = {"downloaded": n_downloaded, "deleted": n_deleted}

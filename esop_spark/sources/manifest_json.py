@@ -223,31 +223,49 @@ def _without_nulls(x):
     return x
 
 
-def write_manifests(entries, out_dir: str, tokens: list[str] | None = None) -> list[str]:
+def has_entries(path: str) -> bool:
+    """Whether the manifest at ``path`` parses and lists at least one entry
+    (modern ``sstables`` or legacy ``entries``). A truncated document, or
+    one with no keyspaces, lists none, and Spark's permissive read yields
+    no rows for it. One document parsed on the driver — the same bound as
+    :func:`write_manifests` and the reference's Jackson reader."""
+    try:
+        with open(path) as f:
+            keyspaces = json.load(f)["snapshot"]["keyspaces"].values()
+        return any(
+            any((t.get("sstables") or {}).values()) or t.get("entries")
+            for ks in keyspaces
+            for t in ks["tables"].values()
+        )
+    except (OSError, ValueError, KeyError, TypeError, AttributeError):
+        return False
+
+
+def write_manifests(rows, out_dir: str, tokens: list[str] | None = None) -> list[str]:
     """S14: write one ``<backup_name>.json`` per backup under ``out_dir``,
     nested in the reference's shape (snapshot → keyspaces → tables →
     sstables → entries).
 
-    ``entries`` is a flat entries DataFrame (collected here) or its rows
-    already on the driver — the backup pipeline passes the metadata rows its
-    transfer action returned, so writing costs no Spark job. Keyspaces,
-    tables, sstables and entries come out sorted, so the same entries always
-    give the same document; null fields are omitted, as ``to_json`` omits
-    them. ``tokens`` (the backing node's ring tokens, impl/Manifest.java
-    tokens field) are embedded verbatim in each doc — they feed the in-place
-    restore's ``initial_token`` rewrite. Written after every object is
-    uploaded, mirroring the reference's manifest-uploaded-last ordering
-    (BaseBackupOperationCoordinator.java:151-153). Driver memory bound: one
-    metadata row (no content) per file of one backup — the same in-heap
-    bound the reference's Jackson writer has for the document
-    (impl/Manifest.java).
+    ``rows`` are flat manifest-entry rows already on the driver — the
+    backup pipeline passes the metadata rows its transfer action returned,
+    so writing costs no Spark job. Keyspaces, tables, sstables and entries
+    come out sorted, so the same entries always give the same document;
+    null fields are omitted, as ``to_json`` omits them. ``tokens`` (the
+    backing node's ring tokens, impl/Manifest.java tokens field) are
+    embedded verbatim in each doc — they feed the in-place restore's
+    ``initial_token`` rewrite. Written after every object is uploaded,
+    mirroring the reference's manifest-uploaded-last ordering
+    (BaseBackupOperationCoordinator.java:151-153). Each document is written
+    to a hidden temp file and renamed into place, so a crash mid-write
+    never leaves a partial manifest where listings and readers see it
+    (both skip dot files). Driver memory bound: one metadata row (no
+    content) per file of one backup — the same in-heap bound the
+    reference's Jackson writer has for the document (impl/Manifest.java).
     """
-    if isinstance(entries, DataFrame):
-        entries = entries.collect()
     docs: dict[str, dict] = {}
     order = ("keyspace", "table_name", "sstable_base", "object_key")
     for r in sorted(
-        (r.asDict() for r in entries), key=lambda r: tuple(r.get(k) or "" for k in order)
+        (r.asDict() for r in rows), key=lambda r: tuple(r.get(k) or "" for k in order)
     ):
         doc = docs.setdefault(r["backup_name"], {
             "snapshot": {"name": r["backup_name"], "keyspaces": {}},
@@ -266,7 +284,9 @@ def write_manifests(entries, out_dir: str, tokens: list[str] | None = None) -> l
     paths = []
     for name, doc in docs.items():
         p = os.path.join(out_dir, f"{name}.json")
-        with open(p, "w") as f:
+        tmp = os.path.join(out_dir, f".{name}.json.tmp")
+        with open(tmp, "w") as f:
             json.dump(_without_nulls(doc), f, indent=2)
+        os.replace(tmp, p)
         paths.append(p)
     return paths

@@ -214,7 +214,7 @@ def test_manifest_json_round_trip(spark, tree):
     assert r["table_id"] == TABLE_ID
     # write back out and re-read: identical flat relation
     out2 = os.path.join(bucket, "manifests2")
-    manifest_json.write_manifests(entries, out2)
+    manifest_json.write_manifests(rows, out2)
     again = manifest_json.read_manifests(spark, out2)
     a = {tuple(sorted(r.asDict().items())) for r in rows}
     b = {tuple(sorted(r.asDict().items())) for r in again.collect()}
@@ -309,3 +309,51 @@ def test_delete_objects_counts_come_from_the_deleting_action(spark, tmp_path):
     n, sizes = pipelines.delete_objects(df)
     assert n == 230 and sum(sizes) == 230 and 0 < max(sizes) <= 100
     assert not any(os.path.exists(p) for p in paths)
+
+
+def test_unreadable_newest_manifest_is_not_latest_and_never_wipes(spark, tree):
+    """A truncated or entry-less manifest is never picked as the latest
+    backup, and restoring one by name raises instead of deleting every
+    local file as an extra."""
+    data, bucket, tmp = tree
+    pipelines.backup(spark, [data], "snap1", bucket, schema_version="sv", ts_millis=1000)
+    mdir = os.path.join(bucket, "manifests")
+    with open(os.path.join(mdir, "snap1-sv-1000.json")) as f:
+        doc = f.read()
+    with open(os.path.join(mdir, "snap3-sv-3000.json"), "w") as f:
+        f.write(doc[: len(doc) // 2])  # a crash mid-write by another writer
+    with open(os.path.join(mdir, "snap2-sv-2000.json"), "w") as f:
+        json.dump({"snapshot": {"name": "snap2-sv-2000", "keyspaces": {}}}, f)
+    assert pipelines.latest_backup(mdir) == "snap1-sv-1000"
+
+    target = os.path.join(tmp, "restored")
+    assert pipelines.restore(spark, bucket, target)["downloaded"] == 4
+    before = sorted(os.path.join(d, f) for d, _, fs in os.walk(target) for f in fs)
+    for name in ("snap3-sv-3000", "snap2-sv-2000", "absent-sv-4000"):
+        with pytest.raises(ValueError, match="no manifest entries"):
+            pipelines.restore(spark, bucket, target, backup_name=name)
+    assert sorted(os.path.join(d, f) for d, _, fs in os.walk(target) for f in fs) == before
+
+
+def test_write_manifests_never_exposes_a_partial_document(spark, tree, monkeypatch):
+    """A crash while a manifest is being written leaves the previous
+    listing as it was: the document only appears by an atomic rename."""
+    data, bucket, _ = tree
+    pipelines.backup(spark, [data], "snap1", bucket, schema_version="sv", ts_millis=1000)
+    mdir = os.path.join(bucket, "manifests")
+    rows = manifest_json.read_manifests(spark, mdir).collect()
+    renamed = [r.asDict() | {"backup_name": "snap2-sv-2000"} for r in rows]
+
+    def crash(obj, f, **kw):
+        f.write(json.dumps(obj)[:50])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(manifest_json.json, "dump", crash)
+    from pyspark.sql import Row
+
+    with pytest.raises(OSError):
+        manifest_json.write_manifests([Row(**r) for r in renamed], mdir)
+    assert manifest_json.list_manifests(mdir) == [("snap1-sv-1000", 1000)]
+    assert {r["backup_name"] for r in manifest_json.read_manifests(spark, mdir).collect()} == {
+        "snap1-sv-1000"
+    }
